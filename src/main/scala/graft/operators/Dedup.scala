@@ -180,8 +180,12 @@ object Dedup {
     // unlike a limit(k+1).collect() probe, NOTHING row-shaped reaches
     // the driver on the over-threshold path (a user-raised threshold of
     // 10^7+ would otherwise make the gate itself a driver-memory hazard
-    // exactly on the inputs that must stay distributed). The count moves
-    // at most k+1 rows through one bounded shuffle, never to the driver.
+    // exactly on the inputs that must stay distributed). The count's
+    // LocalLimit caps each partition at k+1 rows before the
+    // single-partition GlobalLimit, so at most numPartitions × (k+1) rows
+    // cross one shuffle and none reach the driver. A threshold above
+    // Int.MaxValue − 1 cannot be a limit, so it disables the local path
+    // (the conservative side: the build stays distributed).
     val underBound =
       longKeyed && localMax > 0 && localMax <= Int.MaxValue - 1 &&
         edges.limit(localMax.toInt + 1).count() <= localMax

@@ -2056,8 +2056,12 @@ object StreamingIngest {
     * history applies COMMIT BY COMMIT) and apply each window's change
     * feed to a mirror table keyed on `keys`. The feed collapses per key
     * to the latest `_change_ordinal` (insert beats delete at equal
-    * ordinal); winners labeled `insert` UPSERT into the mirror (keyed
-    * merge), winners labeled `delete` land keyed merge-deletes. Because
+    * ordinal), and the window lands as ONE keyed merge into the mirror:
+    * winners labeled `insert` upsert, winners labeled `delete` delete
+    * (`deleteWhere` on the label — a tombstone-carrying delta on a MOR
+    * mirror, one merge-program rewrite on a COW one), so the mirror
+    * commits once per window; a window whose frames yield no winners
+    * commits nothing. Because
     * [[graft.table.WarehouseTable.changesSince]] carries position-delete
     * erasures, the mirror tracks predicate RTBF
     * ([[graft.pipeline.Forget.forgetWhere]]) too — the flow that used to
@@ -2075,7 +2079,7 @@ object StreamingIngest {
     * refuses loudly (one table, one row identity). Replay-safe: the
     * applied-through cursor
     * (`_cdc_applied` inside the mirror root) advances only AFTER the
-    * window's merges commit; a crash between apply and checkpoint
+    * window's merge commits; a crash between apply and checkpoint
     * replays a window whose keyed apply is idempotent — re-upserting
     * identical rows and re-deleting absent keys both land arbitration
     * no-ops. Deleting a key the mirror never held (an insert+delete
@@ -2177,25 +2181,26 @@ object StreamingIngest {
           val target = ids.max
           // STATIC empty-window skip (see startAggView): a maintenance-
           // only window carries no change frames — decided from manifests
-          // alone. The existing isEmpty guards already suppressed the
-          // merges, but the drain still paid the window arbitration, a
-          // localCheckpoint and two isEmpty jobs per empty window. No
-          // exists-guard needed here: an empty feed never created the
-          // mirror before either (both merges were guarded).
+          // alone, so the drain pays no fold and no mirror commit.
           source.changesSinceOpt(spark, from, asOf = Some(target)).foreach {
-            feed0 =>
-            val feed = feed0.withColumn("__ord2", expr(
-              "_change_ordinal * 2 + IF(_change_type = 'insert', 1, 0)"))
-            val winners = tt("winners")(graft.operators.Dedup
-              .latestByKey(feed, keys, orderDesc = "__ord2")
-              .localCheckpoint()) // pin: both merges below consume it
-            val ups = winners.filter(col("_change_type") =!= "delete")
-              .drop("_change_type", "_change_ordinal", "__ord2")
-            tt("upsMerge")(if (!ups.isEmpty) mirror.merge(spark, ups, keys))
-            val dels = winners.filter(col("_change_type") === "delete")
-              .drop("_change_type", "_change_ordinal", "__ord2")
-            tt("delsMerge")(if (!dels.isEmpty)
-              mirror.merge(spark, dels, keys, deleteWhere = Some(lit(true))))
+            feed =>
+            // ONE merge per window, like every other CDC write path: the
+            // winners hold one row per key, so upserts and deletes are
+            // disjoint and a single tombstone-carrying merge equals the
+            // two ordered merges (a MOR mirror lands one delta whose
+            // tombstone flag is the delete label; a COW mirror runs one
+            // merge-program rewrite). skipEmpty keeps a window whose
+            // frames yield zero winners from landing a mirror commit,
+            // decided from work the merge does anyway — never a job of
+            // its own on a non-empty window.
+            val winners = graft.operators.Dedup.latestByKey(
+                feed.withColumn("__ord2", expr(
+                  "_change_ordinal * 2 + IF(_change_type = 'insert', 1, 0)")),
+                keys, orderDesc = "__ord2")
+              .drop("_change_ordinal", "__ord2")
+            tt("merge")(mirror.merge(spark, winners, keys,
+              deleteWhere = Some(col("_change_type") === "delete"),
+              skipEmpty = true))
           }
           writeCursor(target)
         }

@@ -107,19 +107,21 @@ object TableStats {
     }.flatten.toMap
   }
 
-  /** Footer-recorded null counts summed over `cols` across the dirs'
-    * parquet files — footer-priced like [[collect]], no data pages. The
-    * post-write pre-commit guard the MOR delta paths use to enforce the
-    * Iceberg identifier-field contract (merge keys NOT NULL) with ZERO
-    * extra scans: the files were just written, their footers already
-    * carry the answer. Unknown statistics count as zero (never a false
-    * refusal; Spark-written parquet always records null counts).
+  /** Footer-recorded (row count, null count summed over `cols`) across
+    * the dirs' parquet files — footer-priced like [[collect]], no data
+    * pages. The post-write pre-commit guard the MOR delta paths use to
+    * enforce the Iceberg identifier-field contract (merge keys NOT NULL)
+    * with ZERO extra scans: the files were just written, their footers
+    * already carry the answer — and the same opens yield the written row
+    * count, so an empty write is known without a job. Unknown statistics
+    * count as zero nulls (never a false refusal; Spark-written parquet
+    * always records null counts).
     */
-  def nullCount(root: String, relDirs: Seq[String], cols: Set[String]): Long = {
+  def footerCounts(root: String, relDirs: Seq[String], cols: Set[String]): (Long, Long) = {
     val conf = loadedConf()
     parMap(relDirs) { rel =>
       val dir = Paths.get(root, rel)
-      if (!Files.isDirectory(dir)) 0L
+      if (!Files.isDirectory(dir)) (0L, 0L)
       else {
         val listing = Files.list(dir)
         val files =
@@ -128,17 +130,20 @@ object TableStats {
         files.map { f =>
           val reader = ParquetFileReader.open(
             HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
-          try reader.getFooter.getBlocks.asScala.map(
-            _.getColumns.asScala
-              .filter(c => cols.contains(c.getPath.toDotString))
-              .map { c =>
-                val st = c.getStatistics
-                if (st == null || !st.isNumNullsSet) 0L else st.getNumNulls
-              }.sum).sum
-          finally reader.close()
-        }.sum
+          try {
+            val blocks = reader.getFooter.getBlocks.asScala
+            (blocks.map(_.getRowCount).sum,
+              blocks.map(
+                _.getColumns.asScala
+                  .filter(c => cols.contains(c.getPath.toDotString))
+                  .map { c =>
+                    val st = c.getStatistics
+                    if (st == null || !st.isNumNullsSet) 0L else st.getNumNulls
+                  }.sum).sum)
+          } finally reader.close()
+        }.foldLeft((0L, 0L)) { case ((r, n), (fr, fn)) => (r + fr, n + fn) }
       }
-    }.sum
+    }.foldLeft((0L, 0L)) { case ((r, n), (dr, dn)) => (r + dr, n + dn) }
   }
 
   /** (files, rows, bytes) per dir — parquet FOOTER record counts plus fs

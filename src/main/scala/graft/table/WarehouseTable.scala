@@ -1370,15 +1370,16 @@ final class WarehouseTable(val root: String) {
       .toOption.filter(_ > 0)
       .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Write `df` as a new immutable data dir; returns manifest entries
-    * (partitionValue -> dirs) plus per-dir min/max stats harvested from
-    * the freshly written parquet footers.
+  /** Write `df` as a new immutable data dir under `rel`; returns manifest
+    * entries (partitionValue -> dirs) plus per-dir min/max stats harvested
+    * from the freshly written parquet footers. A caller that may have to
+    * sweep the write before committing names `rel` itself: a partitioned
+    * write of zero rows returns no entries, yet leaves `rel` behind.
     */
   private def writeDataDir(
       df: DataFrame, meta: Meta,
-      extraCols: Seq[String] = Nil): (Map[String, List[String]], Map[String, TableStats.DirStats]) = {
-    val uuid = UUID.randomUUID().toString
-    val rel = s"data/$uuid"
+      extraCols: Seq[String] = Nil,
+      rel: String = s"data/${UUID.randomUUID()}"): (Map[String, List[String]], Map[String, TableStats.DirStats]) = {
     val dest = s"$root/$rel"
     val aligned = df.select(
       (meta.schema.fields.toIndexedSeq.map { f =>
@@ -1548,6 +1549,15 @@ final class WarehouseTable(val root: String) {
     * every non-key column of matched rows; `Some(cols)` updates only those
     * columns, preserving the rest from the target (COW only — a MOR delta
     * carries whole rows, so partial SET lists are rejected there).
+    *
+    * `skipEmpty = true`: a batch of zero rows lands no snapshot. The
+    * merge decides it from work it does anyway, so a non-empty batch pays
+    * no extra job: on MOR, the written delta's footer record counts (the
+    * empty delta is swept); on a partitioned COW table, the batch's
+    * partition values (an empty batch writes none, so nothing is read or
+    * written); on a COW full rewrite, the key-check job, which then counts
+    * the batch and is awaited before the table is read. Off by default:
+    * an empty merge otherwise still commits a snapshot.
     */
   def merge(
       spark: SparkSession,
@@ -1555,7 +1565,8 @@ final class WarehouseTable(val root: String) {
       keys: Seq[String],
       updateCols: Option[Seq[String]] = None,
       deleteWhere: Option[Column] = None,
-      evolveSchema: Boolean = false): Unit = {
+      evolveSchema: Boolean = false,
+      skipEmpty: Boolean = false): Unit = {
     // MERGE WITH SCHEMA EVOLUTION (the implicit Iceberg widening the
     // reference relies on, SURVEY.md §1.2): source columns absent from the
     // declared schema are ADDed (nullable, metadata-only) before the merge;
@@ -1573,23 +1584,25 @@ final class WarehouseTable(val root: String) {
     if (meta.properties.get("write.merge.mode").contains("merge-on-read")) {
       require(!partial,
         "merge-on-read deltas carry whole rows; partial UPDATE SET lists need COW")
-      mergeMor(spark, source, keys, meta, deleteWhere)
+      mergeMor(spark, source, keys, meta, deleteWhere, skipEmpty)
     } else deleteWhere match {
       case Some(del) =>
         // CDC deletes over COW run as a merge program: delete-marked
         // matches drop, others update, non-delete unmatched rows insert
         require(updateCols.isEmpty, "deleteWhere with a partial SET list is unsupported")
         val cols = meta.schema.fieldNames.toSeq
-        mergeClauses(spark, source, keys, MergeInto.MergeClauses(
+        mergeProgram(spark, source, keys, MergeInto.MergeClauses(
           matched = Seq(
             MergeInto.DeleteClause(Some(del)),
             MergeInto.UpdateClause(None,
               cols.filterNot(keys.contains).map(c => c -> col(c)).toMap)),
           notMatched = Seq(MergeInto.InsertClause(
             Some(!coalesce(del, lit(false))),
-            cols.map(c => c -> col(c)).toMap))))
+            cols.map(c => c -> col(c)).toMap))),
+          nullSafeKeys = false, skipEmpty)
       case None =>
-        mergeCow(spark, source, keys, meta, if (partial) updateCols else None)
+        mergeCow(spark, source, keys, meta, if (partial) updateCols else None,
+          skipEmpty)
     }
   }
 
@@ -1625,14 +1638,16 @@ final class WarehouseTable(val root: String) {
         "identifier fields must be non-null (Iceberg's identifier-field " +
         "contract); filter or coalesce the batch's keys first")
 
+  /** Returns the written row count, read from the same footers. */
   private def requireKeysNotNull(
-      added: Map[String, List[String]], keys: Seq[String]): Unit = {
-    val dirs = added.values.flatten.toSeq
-    val n = TableStats.nullCount(root, dirs, keys.toSet)
-    if (n > 0) {
-      sweepUncommitted(dirs)
-      throw nullKeyRefusal(keys, s"$n ")
+      rel: String, added: Map[String, List[String]], keys: Seq[String]): Long = {
+    val (rows, nulls) =
+      TableStats.footerCounts(root, added.values.flatten.toSeq, keys.toSet)
+    if (nulls > 0) {
+      sweepUncommitted(Seq(rel))
+      throw nullKeyRefusal(keys, s"$nulls ")
     }
+    rows
   }
 
   /** Merge-on-read: the deduped batch is APPENDED as a delta — O(batch)
@@ -1642,7 +1657,7 @@ final class WarehouseTable(val root: String) {
     */
   private def mergeMor(
       spark: SparkSession, source: DataFrame, keys: Seq[String], meta: Meta,
-      deleteWhere: Option[Column] = None): Unit = {
+      deleteWhere: Option[Column], skipEmpty: Boolean): Unit = {
     recordMergeKeys(meta, keys)
     // tombstone flag rides along in the delta file: a delete is an O(batch)
     // append exactly like an upsert, resolved at read/compaction time.
@@ -1657,25 +1672,32 @@ final class WarehouseTable(val root: String) {
       } else f
     val src = source.withColumn(TombstoneCol,
       coalesce(deleteWhere.getOrElse(lit(false)), lit(false)))
-    val (added, stats) = tt("write")(writeDataDir(src, meta, extraCols = Seq(TombstoneCol)))
-    tt("nullCheck")(requireKeysNotNull(added, keys))
-    tt("commit")(commitRebasable { old =>
-      val seq = old.deltas.map(_.seq).maxOption.getOrElse(0L) + 1
-      Manifest(old.base, old.deltas :+ Delta(seq, added),
-        old.stats ++ stats, old.posDeletes)
-    })
-    // compaction policy: read amplification grows linearly with delta
-    // count (every read unions base + all deltas and re-arbitrates), so
-    // once it crosses the table's threshold the deltas fold back into the
-    // base — Iceberg's maintenance action, run inline while the batch's
-    // context is warm. Threshold via table property
-    // 'compact.delta.threshold' (0 disables; default 8).
-    val threshold = meta.properties.get("compact.delta.threshold")
-      .map(_.toInt).getOrElse(8)
-    tt("compactChk")(
-      if (threshold > 0 && readManifest(currentSnapshotId).deltas.size >= threshold)
-        tryCompact(spark)
-      else autoCompactIfDegraded(spark, meta))
+    val rel = s"data/${UUID.randomUUID()}"
+    val (added, stats) = tt("write")(
+      writeDataDir(src, meta, extraCols = Seq(TombstoneCol), rel = rel))
+    val rows = tt("nullCheck")(requireKeysNotNull(rel, added, keys))
+    // an empty batch under skipEmpty lands nothing: the footers the null
+    // check just read already counted the delta's rows, so no job decides it
+    if (skipEmpty && rows == 0L) sweepUncommitted(Seq(rel))
+    else {
+      tt("commit")(commitRebasable { old =>
+        val seq = old.deltas.map(_.seq).maxOption.getOrElse(0L) + 1
+        Manifest(old.base, old.deltas :+ Delta(seq, added),
+          old.stats ++ stats, old.posDeletes)
+      })
+      // compaction policy: read amplification grows linearly with delta
+      // count (every read unions base + all deltas and re-arbitrates), so
+      // once it crosses the table's threshold the deltas fold back into the
+      // base — Iceberg's maintenance action, run inline while the batch's
+      // context is warm. Threshold via table property
+      // 'compact.delta.threshold' (0 disables; default 8).
+      val threshold = meta.properties.get("compact.delta.threshold")
+        .map(_.toInt).getOrElse(8)
+      tt("compactChk")(
+        if (threshold > 0 && readManifest(currentSnapshotId).deltas.size >= threshold)
+          tryCompact(spark)
+        else autoCompactIfDegraded(spark, meta))
+    }
   }
 
   /** Inline read-amplification maintenance after a delta/sidecar commit —
@@ -1759,8 +1781,9 @@ final class WarehouseTable(val root: String) {
     recordMergeKeys(meta, keys)
     val src = keyRows.select(keys.map(col): _*).distinct()
       .withColumn(TombstoneCol, lit(true))
-    val (added, stats) = writeDataDir(src, meta, extraCols = Seq(TombstoneCol))
-    requireKeysNotNull(added, keys)
+    val rel = s"data/${UUID.randomUUID()}"
+    val (added, stats) = writeDataDir(src, meta, extraCols = Seq(TombstoneCol), rel = rel)
+    requireKeysNotNull(rel, added, keys)
     commitRebasable { old =>
       val seq = old.deltas.map(_.seq).maxOption.getOrElse(0L) + 1
       Manifest(old.base, old.deltas :+ Delta(seq, added),
@@ -1918,7 +1941,22 @@ final class WarehouseTable(val root: String) {
       source: DataFrame,
       keys: Seq[String],
       clauses: MergeInto.MergeClauses,
-      nullSafeKeys: Boolean = false): Unit = {
+      nullSafeKeys: Boolean = false): Unit =
+    mergeProgram(spark, source, keys, clauses, nullSafeKeys, skipEmpty = false)
+
+  /** [[mergeClauses]] plus [[merge]]'s `skipEmpty`, which only `merge`'s
+    * CDC program sets: its insert clause writes every source row's own
+    * partition value, so the batch is empty exactly when it writes into
+    * no partition, and it has no NOT MATCHED BY SOURCE clause (that would
+    * change the target even for an empty batch).
+    */
+  private def mergeProgram(
+      spark: SparkSession,
+      source: DataFrame,
+      keys: Seq[String],
+      clauses: MergeInto.MergeClauses,
+      nullSafeKeys: Boolean,
+      skipEmpty: Boolean): Unit = {
     val meta = readMeta()
     // which partitions can the program WRITE rows into?
     //  - insert clauses: evaluate each clause's value for the partition
@@ -1943,13 +1981,13 @@ final class WarehouseTable(val root: String) {
     mergeCowWith(spark, source, keys, meta, alignSource = false, writtenParts,
       (target, src) =>
         MergeInto.applyClauses(target, src, keys, clauses, nullSafeKeys),
-      enforceKeyNotNull = !nullSafeKeys)
+      enforceKeyNotNull = !nullSafeKeys, skipEmpty = skipEmpty)
   }
 
   /** Copy-on-write merge (partition-pruned rewrite — see class docs). */
   private def mergeCow(
       spark: SparkSession, source: DataFrame, keys: Seq[String], meta: Meta,
-      updateCols: Option[Seq[String]]): Unit =
+      updateCols: Option[Seq[String]], skipEmpty: Boolean): Unit =
     mergeCowWith(spark, source, keys, meta, alignSource = true,
       // upsert writes exactly the source's own partition values
       (src, p) => Some(src.select(col(p).cast("string")).distinct()
@@ -1961,7 +1999,7 @@ final class WarehouseTable(val root: String) {
           case Some(cols) => MergeInto.upsertColumns(target, src, keys, cols)
           case None       => MergeInto.upsertAll(target, src, keys)
         }
-      })
+      }, skipEmpty = skipEmpty)
 
   /** Shared COW machinery: `srcParts(cachedSource, partitionCol)` returns
     * the partition values the program may write (None = unbounded → all
@@ -1973,7 +2011,8 @@ final class WarehouseTable(val root: String) {
       alignSource: Boolean,
       srcPartsFn: (DataFrame, String) => Option[Set[String]],
       upsert: (DataFrame, DataFrame) => DataFrame,
-      enforceKeyNotNull: Boolean = true): Unit = {
+      enforceKeyNotNull: Boolean = true,
+      skipEmpty: Boolean = false): Unit = {
     // COW merges record their keys too: inert for reads (arbitration
     // only runs over deltas), but [[changesSince]] needs the identity to
     // diff a rewrite commit's removed dirs against its re-landed rows
@@ -1998,40 +2037,71 @@ final class WarehouseTable(val root: String) {
     // may surface instead of the null-key verdict (pre-change, the
     // serial check always won). The refusal is deterministic whenever
     // the write succeeds, which is what the identifier-field spec pins.
-    val nullCheckFut: Option[java.util.concurrent.Future[Boolean]] =
-      if (enforceKeyNotNull && keys.nonEmpty) {
+    // Under skipEmpty the same job COUNTS the batch (one aggregate in
+    // place of the isEmpty probe): the verdict is (rows, no null key), so
+    // a full rewrite knows an empty batch without an extra job.
+    val checkKeys = enforceKeyNotNull && keys.nonEmpty
+    val verdictFut: Option[java.util.concurrent.Future[(Long, Boolean)]] =
+      if (checkKeys || skipEmpty) {
+        val anyNull =
+          if (checkKeys) keys.map(col(_).isNull).reduce(_ || _) else lit(false)
         val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-        try Some(pool.submit(new java.util.concurrent.Callable[Boolean] {
-          def call(): Boolean = dbg("nullCheck")(
-            src.filter(keys.map(col(_).isNull).reduce(_ || _)).isEmpty)
+        try Some(pool.submit(new java.util.concurrent.Callable[(Long, Boolean)] {
+          def call(): (Long, Boolean) = dbg("nullCheck")(
+            if (!skipEmpty) (-1L, src.filter(anyNull).isEmpty)
+            else {
+              val r = src.agg(count(lit(1)), count(when(anyNull, 1))).head()
+              (r.getLong(0), r.getLong(1) == 0L)
+            })
         }))
         finally pool.shutdown() // runs the one submitted task, then exits
       } else None
-    def awaitCleanKeys(written: Map[String, List[String]]): Unit =
-      nullCheckFut.foreach { fut =>
-        // ANY outcome that prevents the commit sweeps the written dirs —
-        // a check-job infrastructure failure must not leak orphans any
-        // more than a null-key verdict does
-        val clean =
+    // The batch's row count (-1 when uncounted), or the null-key refusal.
+    // ANY outcome that prevents the commit sweeps the `written` dir — a
+    // check-job failure, or the merging thread interrupted while it waits
+    // (a drain stopped mid-merge), must not leak orphans any more than a
+    // null-key verdict does.
+    def awaitVerdict(written: Option[String]): Long =
+      verdictFut.fold(-1L) { fut =>
+        def sweep(): Unit = written.foreach(rel => sweepUncommitted(Seq(rel)))
+        val (rows, clean) =
           try fut.get()
           catch {
-            case e: java.util.concurrent.ExecutionException =>
-              sweepUncommitted(written.values.flatten)
-              throw e.getCause
+            case e: Throwable =>
+              sweep()
+              e match {
+                case ee: java.util.concurrent.ExecutionException => throw ee.getCause
+                case ie: InterruptedException =>
+                  Thread.currentThread().interrupt()
+                  throw ie
+                case other => throw other
+              }
           }
         if (!clean) {
-          sweepUncommitted(written.values.flatten)
+          sweep()
           throw nullKeyRefusal(keys, "")
         }
+        rows
+      }
+    // the rewrite's write, then the verdict, strictly before any commit
+    def writeChecked(merged: DataFrame)
+        : (Map[String, List[String]], Map[String, TableStats.DirStats]) = {
+      val rel = s"data/${UUID.randomUUID()}"
+      val written = dbg("write")(writeDataDir(merged, meta, rel = rel))
+      awaitVerdict(Some(rel))
+      written
+    }
+    // whole-table rewrite; under skipEmpty the batch's count is awaited
+    // BEFORE the table is read, so an empty batch costs one aggregate over
+    // the cached batch, not a rewrite of the whole table
+    def rewriteAll(): Unit =
+      if (!skipEmpty || awaitVerdict(None) != 0L) {
+        val (entries, stats) = writeChecked(upsert(read(spark), src))
+        commit(cur, Manifest(entries, Nil, stats))
       }
     try {
       meta.partition match {
-        case None =>
-          val target = read(spark)
-          val merged = upsert(target, src)
-          val (entries, stats) = writeDataDir(merged, meta)
-          awaitCleanKeys(entries)
-          commit(cur, Manifest(entries, Nil, stats))
+        case None => rewriteAll()
         case Some(p) =>
           // 1. partitions the program writes into (null → the hive default
           //    partition name so the keys line up with the manifest's)
@@ -2039,11 +2109,10 @@ final class WarehouseTable(val root: String) {
           srcParts match {
             case None =>
               // unbounded writes (partition-moving update): rewrite all
-              val target = read(spark)
-              val merged = upsert(target, src)
-              val (entries, stats) = writeDataDir(merged, meta)
-              awaitCleanKeys(entries)
-              commit(cur, Manifest(entries, Nil, stats))
+              rewriteAll()
+            case Some(sp) if skipEmpty && sp.isEmpty =>
+              // skipEmpty callers write every source row's own partition:
+              // no partition written ⇒ an empty batch, nothing to commit
             case Some(sp) =>
               // 2. partitions holding targets of matched keys (pruned scan:
               //    parquet reads only keys + partition column, and the
@@ -2068,9 +2137,7 @@ final class WarehouseTable(val root: String) {
               val affected = (sp ++ matchedParts).filter(old.base.contains)
               // 3. merge only affected partitions
               val target = read(spark, Some(affected.toSeq))
-              val merged = upsert(target, src)
-              val (rewritten, stats) = dbg("write")(writeDataDir(merged, meta))
-              awaitCleanKeys(rewritten)
+              val (rewritten, stats) = writeChecked(upsert(target, src))
               // On an evolved table the pruned target read sweeps in EVERY
               // legacy-spec dir (they can't prune by the current spec), so
               // their rows are all re-landed in `rewritten` — carrying the
@@ -2101,7 +2168,7 @@ final class WarehouseTable(val root: String) {
     } finally {
       // an unrelated failure mid-merge must not leave the check job
       // running against an unpersisting cache
-      nullCheckFut.foreach(_.cancel(true))
+      verdictFut.foreach(_.cancel(true))
       src.unpersist()
     }
   }

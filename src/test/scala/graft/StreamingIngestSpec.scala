@@ -2575,6 +2575,102 @@ class StreamingIngestSpec extends SparkSpec {
     assert(err.getMessage.contains("identity"))
   }
 
+  /** One-merge CDC mirror contract on a mirror of the given shape: one
+    * mirror snapshot per data window (upserts, deletes and a
+    * delete-then-reinsert of one key folded together), none for a
+    * zero-row window, mirror ≡ source after every drain, and a window
+    * replayed after its mirror commit but before its cursor write
+    * converges to the same mirror.
+    */
+  private def oneMergeMirror(tag: String, precreate: Option[(String, Option[String])]): Unit = {
+    import spark.implicits._
+    val base = tmpDir(s"cdc1_$tag")
+    val src = WarehouseTable(base + "/src")
+    val mirror = WarehouseTable(base + "/mir")
+    val ckpt = base + "/ckpt"
+    def docs(rows: (Long, String, String)*) = rows.toDF("doc_id", "text", "lang")
+    // unpartitioned source: an empty append lands a data dir holding one
+    // zero-row file, i.e. a window with change frames but no winners
+    src.create(docs().schema, None,
+      WarehouseTable.tableProperties("MOR", "snappy") +
+        ("compact.delta.threshold" -> "0"))
+    precreate.foreach { case (mode, part) =>
+      mirror.create(docs().schema, part, WarehouseTable.tableProperties(mode, "snappy"))
+    }
+    def view(t: WarehouseTable): Set[(Long, String, String)] =
+      t.read(spark).select("doc_id", "text", "lang")
+        .as[(Long, String, String)].collect().toSet
+    def mirrorSnap: Long = if (mirror.exists) mirror.currentSnapshotId else 0L
+    def dataDirs: Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val d = Paths.get(mirror.root, "data")
+      if (!Files.isDirectory(d)) Set.empty
+      else {
+        val l = Files.list(d)
+        try l.iterator().asScala.map(_.getFileName.toString).toSet
+        finally l.close()
+      }
+    }
+    // every drain below sees all pending source commits as ONE window
+    def drain(): Long = {
+      val before = mirrorSnap
+      StreamingIngest.startCdcMirror(spark, src, mirror, Seq("doc_id"), ckpt,
+        maxFilesPerTrigger = 100).awaitTermination(180000)
+      assert(view(mirror) == view(src))
+      mirrorSnap - before
+    }
+    val dead = Some(col("text") === "DEAD")
+    src.append(docs((1L, "a", "en"), (2L, "b", "de"), (3L, "c", "en"),
+      (4L, "d", "fr")))
+    assert(drain() == 1L)
+    val cursorAfterLoad = src.currentSnapshotId
+    // one window over four source commits: upsert 1, insert 5, delete 2;
+    // delete 3 then reinsert it under a new lang (a partition move on a
+    // partitioned mirror); position-delete 4
+    src.merge(spark, docs((1L, "a2", "en"), (5L, "e", "fr"), (2L, "DEAD", "de")),
+      Seq("doc_id"), deleteWhere = dead)
+    src.merge(spark, docs((3L, "DEAD", "en")), Seq("doc_id"), deleteWhere = dead)
+    src.merge(spark, docs((3L, "c2", "de")), Seq("doc_id"))
+    assert(src.deleteWhereMor(spark, col("doc_id") === 4L) == 1L)
+    assert(drain() == 1L, "a data window must land exactly one mirror snapshot")
+    assert(view(mirror) == Set((1L, "a2", "en"), (3L, "c2", "de"), (5L, "e", "fr")))
+    // a zero-row window: it carries change frames, yet no winners
+    val beforeEmpty = src.currentSnapshotId
+    src.append(docs())
+    assert(src.changesSinceOpt(spark, beforeEmpty).isDefined)
+    val dirs = dataDirs
+    assert(drain() == 0L, "a zero-row window must not land a mirror commit")
+    assert(dataDirs == dirs, "the zero-row window left an uncommitted data dir")
+    val cursorPath = Paths.get(mirror.root, "_cdc_applied")
+    assert(new String(Files.readAllBytes(cursorPath), StandardCharsets.UTF_8).trim ==
+      s"${src.lineageId}@${src.currentSnapshotId}")
+    // replay: rewinding the cursor to before the mixed window simulates a
+    // crash after that window's mirror commit but before its cursor
+    // write; the next window re-folds it with one new commit, idempotently
+    src.merge(spark, docs((6L, "f", "en"), (1L, "a3", "en")), Seq("doc_id"))
+    Files.write(cursorPath, s"${src.lineageId}@$cursorAfterLoad"
+      .getBytes(StandardCharsets.UTF_8))
+    assert(drain() == 1L)
+    assert(view(mirror) == Set((1L, "a3", "en"), (3L, "c2", "de"), (5L, "e", "fr"),
+      (6L, "f", "en")))
+  }
+
+  test("CDC mirror lands each window as one merge on a MOR mirror; zero-row windows commit nothing; replays converge") {
+    // the mirror start creates an unpartitioned MOR mirror (the source's
+    // layout); a pre-created partitioned one writes zero-row deltas as
+    // an entry-less dir, the other shape the empty-window sweep must cover
+    oneMergeMirror("mor", None)
+    oneMergeMirror("mor_part", Some(("MOR", Some("lang"))))
+  }
+
+  test("CDC mirror lands each window as one merge on pre-created COW mirrors; zero-row windows commit nothing; replays converge") {
+    // partitioned on a non-key column the CDC program rewrites the whole
+    // mirror (its update may move a row's partition), as does an
+    // unpartitioned mirror; both must decide a zero-row window up front
+    oneMergeMirror("cow", Some(("COW", Some("lang"))))
+    oneMergeMirror("cow_unpart", Some(("COW", None)))
+  }
+
   test("incremental aggregate view: updates/deletes/drops fold exactly; restart is a no-op; keyed MOR twin matches") {
     import spark.implicits._
     val base = tmpDir("aggview")

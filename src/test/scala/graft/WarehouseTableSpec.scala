@@ -1071,12 +1071,58 @@ class WarehouseTableSpec extends SparkSpec {
     c.create(sch, None, Map.empty)
     c.merge(spark, df((1, "a")), Seq("k"))
     val cSnap = c.currentSnapshotId
+    val cDirs = dataDirs(c)
     intercept[IllegalArgumentException] {
       c.merge(spark, df((null, "boom")), Seq("k"))
     }
     assert(c.currentSnapshotId == cSnap)
+    assert(dataDirs(c) == cDirs, "refused COW merge left orphan data dirs")
     assert(c.read(spark).collect().map(r => (r.getInt(0), r.getString(1)))
       .toSet == Set((1, "a")))
+  }
+
+  test("merge skipEmpty: a zero-row batch commits nothing and leaves no data dir; on COW it reads and writes nothing") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val rows = Seq((1, "a", "x"), (2, "b", "y")).toDF("k", "v", "p")
+    val dead = Some(col("v") === "DEAD")
+    // COW: partition-bounded upsert, full rewrites (unpartitioned, and the
+    // CDC program's partition-moving update), the CDC program partitioned
+    // on its key; MOR: the empty delta, unpartitioned and partitioned
+    val shapes = Seq(
+      ("COW", Option("p"), Option.empty[org.apache.spark.sql.Column]),
+      ("COW", None, None), ("COW", None, dead), ("COW", Some("p"), dead),
+      ("COW", Some("k"), dead), ("MOR", None, dead), ("MOR", Some("p"), dead))
+    for (((mode, part, del), i) <- shapes.zipWithIndex) {
+      val t = WarehouseTable(tmpDir(s"skipempty_$i"))
+      t.create(rows.schema, part, WarehouseTable.tableProperties(mode, "snappy"))
+      t.merge(spark, rows, Seq("k"))
+      val snap = t.currentSnapshotId
+      val data = Paths.get(t.root, "data")
+      val hidden = Paths.get(t.root, "data_hidden")
+      def dirs: Set[String] =
+        if (!Files.isDirectory(data)) Set.empty
+        else {
+          val l = Files.list(data)
+          try l.iterator().asScala.map(_.getFileName.toString).toSet
+          finally l.close()
+        }
+      // with a COW table's files moved away, reading or writing the table
+      // fails the merge (and a write would leave a `data` dir behind)
+      if (mode == "COW") Files.move(data, hidden)
+      val before = dirs
+      t.merge(spark, rows.limit(0), Seq("k"), deleteWhere = del, skipEmpty = true)
+      assert(t.currentSnapshotId == snap, s"$mode $part $del: empty merge committed")
+      assert(dirs == before, s"$mode $part $del: empty merge left a data dir")
+      if (mode == "COW") {
+        assert(!Files.exists(data), s"$mode $part $del: empty merge wrote")
+        Files.move(hidden, data)
+      }
+      assert(t.read(spark).select("k", "v", "p").as[(Int, String, String)]
+        .collect().toSet == Set((1, "a", "x"), (2, "b", "y")))
+    }
   }
 
   test("TIMESTAMP AS OF resolution binary-searches the id range: O(log n) manifest parses on a 100-commit table") {
